@@ -36,12 +36,13 @@ LAYERS = ("bronze", "silver", "gold")
 
 
 def _write_counted(df: DataFrame, path: str, partition_by: list[str] | None) -> int:
-    """Write ``df`` as parquet and return the rows written, counted by
-    the WRITE JOB itself via ``df.observe`` — never a second read-back
-    scan of what was just written (at 100 TB that re-scan is a full
-    extra pass over the output)."""
+    """Add ``df``'s rows to the parquet dataset at ``path`` (creating it
+    when absent — overwrites stage into a fresh directory) and return
+    the rows written, counted by the WRITE JOB itself via ``df.observe``
+    — never a second read-back scan of what was just written (at 100 TB
+    that re-scan is a full extra pass over the output)."""
     obs = Observation()
-    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -253,16 +254,13 @@ class Catalog:
         )
         return deleted
 
-    def append(self, layer: str, name: str, df: DataFrame) -> None:
+    def append(self, layer: str, name: str, df: DataFrame) -> int:
         """INSERT INTO, honoring the table's recorded partition layout.
-        The caller is responsible for dedup semantics (anti-join first,
-        as in silver_nyt_archive.py:102-120)."""
+        Returns rows appended. The caller is responsible for dedup
+        semantics (anti-join first, as in silver_nyt_archive.py:102-120)."""
         meta = self._read_meta(layer, name) or {}
         self._snapshot(layer, name)  # pre-append state stays travelable
-        writer = df.write.mode("append")
-        if meta.get("partition_by"):
-            writer = writer.partitionBy(*meta["partition_by"])
-        writer.parquet(str(self.path(layer, name)))
+        return _write_counted(df, str(self.path(layer, name)), meta.get("partition_by"))
 
     # -- time travel (hardlink snapshots) ---------------------------------
 

@@ -21,6 +21,7 @@ plans/tpch.py w1 for the row_number shape.
 from __future__ import annotations
 
 import os
+import re
 
 
 class NoFilesForRunDate(Exception):
@@ -29,8 +30,10 @@ class NoFilesForRunDate(Exception):
 
 
 def format_run_date(run_date: str, sep: str) -> str:
-    """'YYYYMMDD' → 'YYYY<sep>MM<sep>DD' (bronze_arxiv.py:26)."""
-    assert len(run_date) == 8, f"run_date must be YYYYMMDD, got {run_date!r}"
+    """'YYYYMMDD' → 'YYYY<sep>MM<sep>DD' (bronze_arxiv.py:26). Raises
+    ValueError unless ``run_date`` is exactly 8 ASCII digits."""
+    if not re.fullmatch(r"[0-9]{8}", run_date):
+        raise ValueError(f"run_date must be YYYYMMDD, got {run_date!r}")
     return f"{run_date[:4]}{sep}{run_date[4:6]}{sep}{run_date[6:]}"
 
 

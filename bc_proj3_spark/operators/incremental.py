@@ -216,13 +216,10 @@ def merge_upsert(
     )
 
 
-def dedup_insert(tgt: DataFrame, src: DataFrame, key: str) -> MergeResult:
-    """INSERT-only-new via anti join on the surrogate key. The fresh
-    batch is persisted so the insert count and the append read one
-    materialization; callers unpersist via ``cleanup()``."""
-    from pyspark import StorageLevel
-
-    fresh = src.join(tgt.select(key), on=key, how="left_anti").select(
+def dedup_insert(tgt: DataFrame, src: DataFrame, key: str) -> DataFrame:
+    """INSERT-only-new: the ``src`` rows whose surrogate ``key`` is absent
+    from ``tgt`` (anti join), in tgt's column order. Lazy — the caller's
+    append is the one action, and ``Catalog.append`` counts its rows."""
+    return src.join(tgt.select(key), on=key, how="left_anti").select(
         *[F.col(c) for c in tgt.columns]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    return MergeResult(df=fresh, inserted=fresh.count(), updated=0, caches=(fresh,))
+    )

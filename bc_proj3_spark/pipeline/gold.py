@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bc_proj3_spark.catalog import Catalog
+from bc_proj3_spark.pipeline.silver import SOURCES
 
 # Reference scoring config (gold_article_scoring.py:104-136), weights from
 # the public glossaries cited there.
@@ -126,38 +127,28 @@ def score_tokens(unique_tokens: Column) -> Column:
 # stages
 # ---------------------------------------------------------------------------
 
-_WORD_SOURCES = {
-    # source tag -> (silver table, sk column, text columns, date column)
-    "nyt": ("nytarchive", "nyt_sk", ("abstract", "lead_paragraph", "snippet"), "publish_dt"),
-    "ggl": ("googlescholar", "ggl_sk", ("snippet", "title"), "publish_dt"),
-    "arx": ("arxiv", "arx_sk", ("summary", "title"), "updated_dt"),
-}
-
 
 def gold_words(spark: SparkSession, catalog: Catalog, fresh: bool = False) -> dict:
-    """Three <src>_words tables (gold_integrated_data_preNLP.py:48-138)."""
+    """One <table>_words table per source (gold_integrated_data_preNLP.py:48-138)."""
     counts = {}
-    for src, (table, sk, text_cols, date_col) in _WORD_SOURCES.items():
+    for src in SOURCES.values():
         if fresh:
-            catalog.drop("gold", f"{table}_words")
-        silver = catalog.read("silver", table)
+            catalog.drop("gold", f"{src.table}_words")
+        silver = catalog.read("silver", src.table)
         words = silver.select(
-            F.lit(src).alias("source"),
-            F.col(sk).alias("source_sk"),
-            F.lower(F.concat_ws(" ", *text_cols)).alias("words"),
-            F.col(date_col).alias("publish_dt"),
+            F.lit(src.tag).alias("source"),
+            F.col(src.key).alias("source_sk"),
+            F.lower(F.concat_ws(" ", *src.text_cols)).alias("words"),
+            F.col(src.date_col).alias("publish_dt"),
         )
-        counts[src] = catalog.overwrite("gold", f"{table}_words", words)
+        counts[src.tag] = catalog.overwrite("gold", f"{src.table}_words", words)
     return counts
 
 
 def combined_pre_nlp(spark: SparkSession, catalog: Catalog) -> DataFrame:
-    """vw_combined_pre_nlp: UNION ALL of the three words tables
+    """vw_combined_pre_nlp: UNION ALL of the words tables
     (gold_integrated_data_preNLP.py:156-166) — a view, not a copy."""
-    parts = [
-        catalog.read("gold", f"{table}_words")
-        for table, _, _, _ in _WORD_SOURCES.values()
-    ]
+    parts = [catalog.read("gold", f"{src.table}_words") for src in SOURCES.values()]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

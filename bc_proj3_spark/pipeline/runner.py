@@ -16,13 +16,13 @@ SURVEY.md §7.4.7) and is pinned by tests/test_pipeline.py.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
 from bc_proj3_spark.catalog import Catalog
 from bc_proj3_spark.io import landing
-from bc_proj3_spark.pipeline import bronze as bz
 from bc_proj3_spark.pipeline import gold as gd
 from bc_proj3_spark.pipeline import silver as sv
 
@@ -36,20 +36,6 @@ class StageResult:
     status: str
     rows: int = 0
     metrics: dict = field(default_factory=dict)
-
-
-_BRONZE = (
-    # stage name, landing subdir, date separator, bronze fn
-    ("bronze_arxiv", "arxiv", "-", bz.bronze_arxiv),
-    ("bronze_nyt", "nytarchive", "_", bz.bronze_nyt),
-    ("bronze_scholar", "googlescholar", "_", bz.bronze_scholar),
-)
-
-_SILVER = (
-    ("silver_arxiv", "arxiv", sv.silver_arxiv),
-    ("silver_nyt", "nytarchive", sv.silver_nyt),
-    ("silver_scholar", "googlescholar", sv.silver_scholar),
-)
 
 
 def run_pipeline(
@@ -69,29 +55,29 @@ def run_pipeline(
     Off by default: tests and ad-hoc runs shouldn't churn files."""
     results: dict[str, StageResult] = {}
 
-    import os
-
-    for name, subdir, sep, fn in _BRONZE:
+    for src in sv.SOURCES.values():
+        name = f"bronze_{src.name}"
         try:
             batch = landing.select_batch_file(
-                run_date, os.path.join(landing_dir, subdir), sep
+                run_date, os.path.join(landing_dir, src.table), src.date_sep
             )
         except landing.NoFilesForRunDate:
             results[name] = StageResult(name, SKIPPED)
             continue
-        rows = fn(spark, catalog, batch, run_date)
+        rows = src.bronze(spark, catalog, batch, run_date)
         results[name] = StageResult(name, LOADED, rows=rows)
 
-    for name, table, fn in _SILVER:
-        if not catalog.exists("bronze", table):
+    for src in sv.SOURCES.values():
+        name = f"silver_{src.name}"
+        if not catalog.exists("bronze", src.table):
             results[name] = StageResult(name, SKIPPED)
             continue
-        metrics = fn(spark, catalog, fresh=fresh)
+        metrics = sv.silver(spark, catalog, src, fresh=fresh)
         results[name] = StageResult(
             name, LOADED, rows=metrics.pop("rows"), metrics=metrics
         )
 
-    silver_ready = all(catalog.exists("silver", t) for _, t, _ in _SILVER)
+    silver_ready = all(catalog.exists("silver", s.table) for s in sv.SOURCES.values())
     if silver_ready:
         counts = gd.gold_words(spark, catalog, fresh=fresh)
         results["gold_words"] = StageResult(
@@ -105,11 +91,11 @@ def run_pipeline(
 
     if maintenance:
         compacted: dict[str, int] = {}
-        for _, table, _fn in _SILVER:
-            if catalog.exists("silver", table):
-                done = catalog.compact("silver", table)
+        for src in sv.SOURCES.values():
+            if catalog.exists("silver", src.table):
+                done = catalog.compact("silver", src.table)
                 if done:
-                    compacted[table] = sum(b - a for b, a in done.values())
+                    compacted[src.table] = sum(b - a for b, a in done.values())
         vacuumed = sum(len(catalog.vacuum(layer)) for layer in ("bronze", "silver", "gold"))
         results["maintenance"] = StageResult(
             "maintenance", LOADED,

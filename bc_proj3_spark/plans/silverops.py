@@ -19,13 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bc_proj3_spark.pipeline.silver import DAYS_AGO_RE, days_ago
 from bc_proj3_spark.plans.tables import table
 from bc_proj3_spark.registry import register
 
 RUN_DATE = "1998-06-01"  # the run_date widget of the reference, as a param
-
-# "N days ago" prefix, as in scholar snippets (silver_google_scholar.py:108)
-_DAYS_AGO_RE = r"^\s*(\d+)\s+days? ago"
 
 
 # ---------------------------------------------------------------------------
@@ -44,12 +42,12 @@ _SV1_ORACLE = f"""
 WITH src AS (SELECT doc_id, {_SV1_SNIPPET_SQL} AS snippet FROM documents)
 SELECT
   doc_id,
-  CASE WHEN regexp_matches(snippet, '{_DAYS_AGO_RE}')
-       THEN CAST(regexp_extract(snippet, '{_DAYS_AGO_RE}', 1) AS INTEGER)
+  CASE WHEN regexp_matches(snippet, '{DAYS_AGO_RE}')
+       THEN CAST(regexp_extract(snippet, '{DAYS_AGO_RE}', 1) AS INTEGER)
   END AS days_ago,
   COALESCE(
-    DATE '{RUN_DATE}' - CASE WHEN regexp_matches(snippet, '{_DAYS_AGO_RE}')
-         THEN CAST(regexp_extract(snippet, '{_DAYS_AGO_RE}', 1) AS INTEGER) END,
+    DATE '{RUN_DATE}' - CASE WHEN regexp_matches(snippet, '{DAYS_AGO_RE}')
+         THEN CAST(regexp_extract(snippet, '{DAYS_AGO_RE}', 1) AS INTEGER) END,
     DATE '{RUN_DATE}') AS publish_dt
 FROM src
 """
@@ -84,10 +82,7 @@ def sv1_scholar_date_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.col("text"))
     )
-    days = F.when(
-        snippet.rlike(_DAYS_AGO_RE),
-        F.regexp_extract(snippet, _DAYS_AGO_RE, 1).cast("int"),
-    )
+    days = days_ago(snippet)  # the scholar silver projection's own parse
     run_date = F.lit(RUN_DATE).cast("date")
     return docs.select(
         "doc_id",

@@ -11,9 +11,10 @@ Two surfaces:
   machinery is held to the same value-hash bar as every batch operator.
 
 - :func:`stream_silver_arxiv`: the silver incremental load as a
-  Structured Streaming job — readStream over the landing dir, the same
-  typed projection as pipeline/silver.py, watermark + dropDuplicates on
-  the surrogate key, and a foreachBatch merge into the catalog. The
+  Structured Streaming job — readStream over the landing dir, the
+  arXiv entry's typed projection and surrogate key from
+  pipeline/silver.py, dropDuplicates on the surrogate key, and a
+  foreachBatch merge into the catalog. The
   batch cursor (silver_arxiv.py:43-50,130-152) becomes checkpoint-backed
   source offsets: re-running never re-lands processed files, which is
   the same idempotency contract with exactly-once bookkeeping instead
@@ -164,6 +165,9 @@ def stream_silver_arxiv(
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
     from bc_proj3_spark.operators import incremental as inc
+    from bc_proj3_spark.pipeline.silver import SOURCES
+
+    arxiv = SOURCES["arxiv"]
 
     entry = StructType(
         [
@@ -183,21 +187,7 @@ def stream_silver_arxiv(
         .json(landing_dir)
     )
     flat = src.select(F.explode("feed.entry").alias("e")).select("e.*")
-    tail = F.split(F.split(F.col("id"), "/").getItem(4), "v")
-    proj = flat.select(
-        tail.getItem(0).alias("id"),
-        tail.getItem(1).cast("int").alias("version"),
-        F.col("id").alias("link"),
-        "summary",
-        "title",
-        F.substring(F.col("updated"), 1, 10).cast("date").alias("updated_dt"),
-    )
-    keyed = proj.select(
-        F.sha2(
-            F.concat_ws("||", F.col("id"), F.col("version"), F.col("updated_dt")), 256
-        ).alias("arx_sk"),
-        "*",
-    )
+    keyed = arxiv.keyed(flat.select(*arxiv.columns()))
 
     n_batches = {"batches": 0}
 
@@ -228,7 +218,10 @@ def stream_silver_arxiv(
             key="id",
             update_when=F.col("src.version") > F.col("tgt.version"),
         )
-        catalog.overwrite("silver", "arxiv_stream", res.df)
+        try:
+            catalog.overwrite("silver", "arxiv_stream", res.df)
+        finally:
+            res.cleanup()
 
     query = (
         keyed.writeStream.foreachBatch(_upsert)

@@ -344,10 +344,46 @@ def _run_parity_chunk(names, env):
     return payload
 
 
+def _shrink_idle_session_heap():
+    """Hand the in-process test session's free heap back to the OS
+    before the replay starts ``_PARITY_PROCS`` more JVMs.
+
+    The session idles through the replay, but its heap stays committed
+    at its high-water mark: ~5.5 GB of RSS by this point of the suite
+    against a live set under 1 GB. Next to four parity JVMs that leaves
+    a 16 GB machine a few hundred MB, and an OOM kill takes the largest
+    process — the test session, failing every later test. A full GC
+    under tight heap-free ratios shrinks the committed heap to about
+    the live set; the default ratios are then restored, so later tests
+    size their heap as before."""
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is None:
+        return
+    jvm = active._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    saved = {
+        k: hotspot.getVMOption(k).getValue()
+        for k in ("MinHeapFreeRatio", "MaxHeapFreeRatio")
+    }
+    # Min must stay <= Max at every step: lower Min first, raise Max first
+    hotspot.setVMOption("MinHeapFreeRatio", "10")
+    hotspot.setVMOption("MaxHeapFreeRatio", "20")
+    try:
+        jvm.System.gc()
+    finally:
+        hotspot.setVMOption("MaxHeapFreeRatio", saved["MaxHeapFreeRatio"])
+        hotspot.setVMOption("MinHeapFreeRatio", saved["MinHeapFreeRatio"])
+
+
 @pytest.fixture(scope="module")
 def parity_counts():
     from concurrent.futures import ThreadPoolExecutor
 
+    _shrink_idle_session_heap()
     env = dict(os.environ)
     env["PYTHONPATH"] = "/root/repo" + os.pathsep + env.get("PYTHONPATH", "")
     all_names = PARITY_QUERIES + [

@@ -14,9 +14,10 @@ from pyspark.sql import functions as F
 
 from bc_proj3_spark.catalog import Catalog
 from bc_proj3_spark.io import sources
+from bc_proj3_spark.io.landing import select_batch_file
 from bc_proj3_spark.operators.incremental import PreconditionError, resolve_watermark
 from bc_proj3_spark.pipeline import run_pipeline
-from bc_proj3_spark.pipeline.silver import silver_arxiv
+from bc_proj3_spark.pipeline.silver import SOURCES, silver, silver_arxiv
 
 RUN1, RUN2 = "20230401", "20230402"
 
@@ -88,7 +89,18 @@ def test_incremental_second_day(spark, env):
     landing, catalog = env
     run_pipeline(spark, catalog, landing, RUN1)
     wm1 = resolve_watermark(catalog, "arxiv")
+    tables = ("arxiv", "nytarchive", "googlescholar")
+    n1 = {t: catalog.read("silver", t).count() for t in tables}
+    for t in tables:
+        # the CREATE entry's insert count is the write's own row count
+        (create,) = catalog.history("silver", t)
+        assert create["operation"] == "CREATE"
+        assert create["operationMetrics"]["numTargetRowsInserted"] == n1[t], t
     r2 = run_pipeline(spark, catalog, landing, RUN2)
+    # append-loaded tables grow by exactly the inserted metric
+    for stage, t in (("silver_nyt", "nytarchive"), ("silver_scholar", "googlescholar")):
+        grown = catalog.read("silver", t).count() - n1[t]
+        assert r2[stage].metrics["inserted"] == grown, t
 
     arx = catalog.read("silver", "arxiv")
     # day-2 batch: ids 2306..2311 overlap day-1's 2303..2308 per
@@ -104,6 +116,26 @@ def test_incremental_second_day(spark, env):
 
     wm2 = resolve_watermark(catalog, "arxiv")
     assert wm2 > wm1  # watermark advanced
+
+
+def test_silver_day2_job_count(spark, env):
+    """Silver takes insert counts from its catalog writes; a re-count
+    creeping back in shows up here as extra Spark jobs on day 2."""
+    landing, catalog = env
+    run_pipeline(spark, catalog, landing, RUN1)
+    for src in SOURCES.values():
+        batch = select_batch_file(RUN2, f"{landing}/{src.table}", src.date_sep)
+        src.bronze(spark, catalog, batch, RUN2)
+    sc = spark.sparkContext
+    group = "silver-day2-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        for src in SOURCES.values():
+            silver(spark, catalog, src)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # 52 jobs when silver re-counted its CREATE/INSERT rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 47
 
 
 def test_fresh_load_resets(spark, env):

@@ -41,7 +41,11 @@ def test_stream_silver_exactly_once(spark, env):
 
     # a new landing file is picked up incrementally and merged
     sources.fetch_arxiv("20230403", landing, epoch=3000)
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
     stream_silver_arxiv(spark, catalog, f"{landing}/arxiv", ckpt)
+    # the merging micro-batch releases the merge's cached branches
+    assert jsc.getPersistentRDDs().size() == persisted
     tbl3 = catalog.read("silver", "arxiv_stream")
     assert tbl3.count() == 12  # 3 more new ids on day 3
     assert tbl3.select("id").distinct().count() == 12

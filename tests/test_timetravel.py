@@ -84,9 +84,10 @@ def test_partition_scoped_overwrite_snapshots_whole_table(spark, tmp_path):
 def test_append_snapshots_and_default_off(spark, tmp_path):
     on = Catalog(spark, str(tmp_path / "on"), retain_versions=1)
     on.overwrite("silver", "t", _mk(spark, "a"))
-    on.append("silver", "t", _mk(spark, "b"))
+    # append returns the rows it wrote, counted by the write job
+    assert on.append("silver", "t", _mk(spark, "b", "c")) == 2
     assert [r["id"] for r in on.read_version("silver", "t").collect()] == ["a"]
-    assert sorted(r["id"] for r in on.read("silver", "t").collect()) == ["a", "b"]
+    assert sorted(r["id"] for r in on.read("silver", "t").collect()) == ["a", "b", "c"]
 
     off = Catalog(spark, str(tmp_path / "off"))  # default retain_versions=0
     off.overwrite("silver", "t", _mk(spark, "a"))
